@@ -32,6 +32,7 @@ the crash-before-commit invisibility property.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -327,7 +328,13 @@ def _pinned_parquet_read(
     job per read (round-12, measured via scripts/job_ledger.py), paid
     by every staged-file re-read of every commit. Falls back to the
     inference read for footer schemas the arrow->spark conversion
-    cannot express."""
+    cannot express.
+
+    Precondition: ``paths`` are the staged files (or staging dir) of
+    ONE commit, written by one Spark write of one DataFrame, so every
+    file carries the first file's schema. Reads spanning commits,
+    whose file schemas may have drifted, go through _read_physical,
+    which pins the manifest's schema instead."""
     try:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
@@ -340,14 +347,11 @@ def _pinned_parquet_read(
         return spark.read.parquet(*paths)
 
 
-def _file_stats(path: str, cols: list[str]) -> dict:
-    """Per-column [min, max] from the parquet FOOTER row-group stats —
-    no data read. JSON-safe types only (numeric/string); columns with
-    missing or exotic stats are simply omitted (pruning stays safe:
-    a file without stats is never skipped)."""
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(path).metadata
+def _footer_min_max(meta, cols: list[str]) -> dict:
+    """Per-column [min, max] folded over a parquet footer's row-group
+    stats. JSON-safe types only (numeric/string); columns with missing
+    or exotic stats are simply omitted (pruning stays safe: a file
+    without stats is never skipped)."""
     out: dict[str, list] = {}
     idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
     for col in cols:
@@ -367,6 +371,14 @@ def _file_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
+def _file_stats(path: str, cols: list[str]) -> dict:
+    """Per-column [min, max] from the parquet FOOTER row-group stats —
+    no data read (see _footer_min_max)."""
+    import pyarrow.parquet as pq
+
+    return _footer_min_max(pq.ParquetFile(path).metadata, cols)
+
+
 # Auto-coalesce threshold for freshly staged commits: a commit whose
 # staged parquet totals at most this many bytes is rewritten into ONE
 # file on the driver (pyarrow) before the manifest records it. Spark's
@@ -376,11 +388,22 @@ def _file_stats(path: str, cols: list[str]) -> dict:
 # probes (guide §6 "small files hurt twice"). Scale-adaptive by
 # construction — a commit bigger than the threshold keeps its parallel
 # layout, so real data at cluster scale is untouched; this is Delta's
-# optimized-write idea applied at the commit point. Env-tunable so a
-# deployment can widen or disable it (0 disables).
-_STAGE_COMPACT_MAX_BYTES = int(
-    os.environ.get("BESK_STAGE_COMPACT_MAX_BYTES", str(32 * 1024 * 1024))
-)
+# optimized-write idea applied at the commit point.
+_STAGE_COMPACT_MAX_BYTES = 32 * 1024 * 1024
+
+
+def _layout_bound(manifest: dict) -> bool:
+    """THE staging auto-coalesce rule: declared pruning metadata
+    (partitioning, per-file stats, blooms) makes a table's file layout
+    load-bearing for file skipping, so its commits keep their staged
+    files; a table without it can never be file-pruned, and a small
+    commit's many task-shard files are pure overhead (_stage_files
+    coalesces them)."""
+    return bool(
+        manifest.get("partition_by")
+        or manifest.get("stats")
+        or manifest.get("bloom_cols")
+    )
 
 
 def _looks_clustered(paths: list[str]) -> bool:
@@ -399,23 +422,7 @@ def _looks_clustered(paths: list[str]) -> bool:
         meta = pq.ParquetFile(p).metadata
         if meta.num_rows == 0:
             continue
-        cols: dict = {}
-        for i in range(meta.num_columns):
-            name = meta.schema.column(i).name
-            lo = hi = None
-            ok = True
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(i).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if ok and isinstance(lo, (int, float, str)) and not isinstance(
-                lo, bool
-            ):
-                cols[name] = (lo, hi)
-        per_file.append(cols)
+        per_file.append(_footer_min_max(meta, meta.schema.names))
     if len(per_file) < 2:
         return False
     candidates = set.intersection(*[set(c) for c in per_file])
@@ -547,9 +554,9 @@ def _enforce_unique(
     Cost model (documented, like everything at 100 TB): the in-batch
     check is one combinable aggregate over the new rows. The vs-table
     probe takes the fast path when the batch carries <= 1024 distinct
-    keys (the CDC/late-fix shape): collect them and bloom-prune the
-    existing-file set via the table's key bloom (select_files_point),
-    then semi-join ONLY the candidate files. A wide batch falls back
+    keys (the CDC/late-fix shape): collect them, prune the existing-file
+    set by the key's zones and bloom (select_files_point), then
+    semi-join ONLY the candidate files. A wide batch falls back
     to one key-projected, column-pruned scan + semi-join — what PK
     enforcement costs without an index, stated rather than hidden."""
     spark = df.sparkSession
@@ -594,16 +601,11 @@ def _enforce_unique(
         and len(probe) <= _BLOOM_DRIVER_KEYS_MAX
         and keys[0] in prev.get("bloom_cols", [])
     ):
-        entries = _load_bloom_entries(table_dir, prev, col=keys[0])
-        vals = [r[keys[0]] for r in probe]
-        files = [
-            rel
-            for rel in files
-            if (e := entries.get((os.path.normpath(rel), keys[0]))) is None
-            or any(_bloom_maybe_contains(e[2], v, e[0], e[1]) for v in vals)
-        ]
+        files, _skipped = select_files_point(
+            table_dir, prev["version"], keys[0], [r[keys[0]] for r in probe]
+        )
         if not files:
-            return  # every file's bloom rules every new key out
+            return  # every file's zone or bloom rules every new key out
     elif probe is None or len(probe) > _BLOOM_DRIVER_KEYS_MAX:
         # wide batch (round-11): distributed zone+bloom probe instead
         # of the former unconditional full scan — same no-false-
@@ -790,33 +792,21 @@ def write_version(
     idx_rel = None
     try:
         _to_physical(df, cmap).write.mode("overwrite").parquet(staging)
-        # Auto-coalesce ONLY metadata-free tables: declared pruning
-        # metadata (partitioning, per-file stats, blooms — passed here
-        # or inherited from the head) means the caller's file layout
-        # is load-bearing for file skipping, so it is preserved; a
-        # table with no pruning metadata can never be file-pruned and
-        # a small commit's many task-shard files are pure overhead.
-        _head_meta = (
-            _load_manifest(table_dir, main_versions(table_dir)[-1])
-            if main_versions(table_dir) and mode == "append"
-            else {}
-        )
-        _layout_bound = bool(
-            partition_by
-            or stats_cols
-            or bloom_cols
-            or _head_meta.get("partition_by")
-            or _head_meta.get("stats")
-            or _head_meta.get("bloom_cols")
-        )
+        if coalesce_small is None:
+            # pruning metadata passed here or inherited from the head
+            head = main_versions(table_dir) if mode == "append" else []
+            coalesce_small = not (
+                _layout_bound(
+                    {
+                        "partition_by": partition_by,
+                        "stats": stats_cols,
+                        "bloom_cols": bloom_cols,
+                    }
+                )
+                or (head and _layout_bound(_load_manifest(table_dir, head[-1])))
+            )
         new_files, new_meta = _stage_files(
-            table_dir,
-            rel_dir,
-            coalesce_small=(
-                (not _layout_bound)
-                if coalesce_small is None
-                else coalesce_small
-            ),
+            table_dir, rel_dir, coalesce_small=coalesce_small
         )
         # Gate passes below (expectations, unique-keys) are independent
         # actions: running them against ``df`` re-executes its whole
@@ -1097,18 +1087,19 @@ def _release_claim(table_dir: str, v: int) -> None:
 #   commit's largest new file (power of two, clamped) — ~0.7% FPR at
 #   k=4 regardless of file size.
 # - SIDECAR, NOT INLINE: bitmaps live in parquet INDEX datasets under
-#   ``bloom/v<N>/`` (rows: f, col, m, k, bits BINARY), built and
-#   written executor-side; the manifest stores only the column list
+#   ``bloom/v<N>/`` (rows: f, col, m, k, bits BINARY), built on the
+#   driver for a commit of <= _BLOOM_DRIVER_ROWS_MAX staged rows and
+#   executor-side above it; the manifest stores only the column list
 #   and the LIST of index datasets (each commit appends one covering
 #   its new files — the Iceberg manifest-list shape). Commit cost is
 #   O(new files); nothing is rewritten; stale entries for files no
 #   snapshot lists anymore are dead weight until vacuum sweeps their
 #   index, never a correctness issue.
 #
-# Hashing is engine-portable and builder==prober by construction: bit
-# position i = int(md5("{i}:" + value)[:8 hex], 16) % m with the value
-# rendered via Spark CAST(x AS STRING) — identical to Python str() for
-# the supported integer and string key types.
+# Hashing is engine-portable and builder==prober by construction: the
+# contract is written down once, in _bloom_value_expr (the value's
+# spelling), _bloom_words (its k md5 words, Python) and
+# _bloom_positions_expr (the same words % m, JVM).
 
 _BLOOM_K = 4  # hash probes
 # Distributed zone+bloom probes pay several fixed Spark jobs (sidecar
@@ -1140,13 +1131,10 @@ def _probe_worthwhile(prev: dict) -> bool:
         total += b
     return total >= _PROBE_MIN_BYTES
 _BLOOM_MIN_M = 2048  # floor: tiny files still get a real bitmap
-# Bloom builder path switch: at/above this many rows in the commit's
-# largest file, md5 bit positions are computed in the JVM (codegen)
-# and Python only scatters bits — the per-row Python hashing term
-# dominates there. Below it the per-row hashlib fold wins (the JVM-
-# position plan carries ~+0.15s/commit of fixed cost; measured A/B).
-# Both paths are byte-identical (pinned).
-_BLOOM_VECTORIZE_MIN_ROWS = 1 << 16
+# Bloom builder switch: a commit of at most this many staged rows
+# (~1-2 MB of keys) builds its sidecar on the driver; a larger one
+# builds it distributed (see _write_bloom_index).
+_BLOOM_DRIVER_ROWS_MAX = 1 << 16
 _BLOOM_MAX_M = 1 << 22  # cap: 512 KiB bitmap per file-column
 _BLOOM_BITS_PER_ROW = 12
 # driver-side probe path: collect the key set and test every sidecar
@@ -1193,6 +1181,37 @@ def _bloom_value_expr(cols: list[str]):
     )
 
 
+def _bloom_words(value, k: int) -> list[int]:
+    """THE bloom hashing kernel, Python side: the k md5 words of one
+    bloom value, word i = int(md5("{i}:" + str(value))[:8 hex], 16);
+    bit position i = word i % m. ``value`` is a _bloom_value_expr
+    string or an int/string key whose str() spells it the same way.
+    Every Python builder and prober hashes through here."""
+    return [
+        int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:8], 16)
+        for i in range(k)
+    ]
+
+
+def _bloom_positions_expr(val, m: int, k: int) -> list:
+    """JVM twin of _bloom_words (codegen md5 + conv — same "{i}:"
+    prefix, same first-8-hex-chars word): the k bit positions word % m
+    of the bloom value column ``val``. NULL in, NULL out."""
+    return [
+        (
+            F.conv(
+                F.substring(
+                    F.md5(F.concat(F.lit(f"{i}:"), val).cast("binary")), 1, 8
+                ),
+                16,
+                10,
+            ).cast("long")
+            % m
+        ).cast("int")
+        for i in range(k)
+    ]
+
+
 def _bloom_spec_for(manifest: dict, key_cols: list[str]):
     """Find the manifest bloom spec covering ``key_cols`` (LOGICAL
     names). Specs store PHYSICAL names ("a" or composite "a,b" —
@@ -1209,95 +1228,89 @@ def _bloom_spec_for(manifest: dict, key_cols: list[str]):
     return None
 
 
-def _bloom_build_driver(
-    table_dir: str,
-    rels: list[str],
-    have: list[str],
-    m: int,
-    k: int,
-    mb: int,
-    rel: str,
-) -> str | None:
-    """Tiny-commit fast path: build the sidecar ON THE DRIVER with
-    pyarrow + hashlib — zero Spark jobs. The sidecar is INDEX
-    metadata, and the commit's staged files are local KB-scale
-    parquet (the gate bounds total rows at _BLOOM_VECTORIZE_MIN_ROWS,
-    ~1-2 MB of keys), so this is the same driver-metadata discipline
-    as _stage_files / _load_bloom_entries. hashlib IS the probe's
-    hashing contract, so builder==prober trivially; the (f,col)
-    emit-only-when-a-non-null-value-exists rule matches the Spark
-    fold exactly. Declines (returns None) for composite specs or
-    non-int/string key dtypes, whose value spelling is defined by JVM
-    expressions (to_json/CAST) that a Python twin must not guess."""
-    import hashlib
-
+def _bloom_arrow_keys(schema, have: list[str]) -> bool:
+    """Can the driver builder take ``have``'s bloom values straight
+    from pyarrow columns? Only for single-column int/string specs,
+    whose Python str() IS the CAST(x AS STRING) spelling; composite
+    specs and other dtypes are spelled by JVM expressions (to_json /
+    sha2 / CAST) that a Python twin must not guess."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    first = pq.ParquetFile(os.path.join(table_dir, rels[0])).schema_arrow
     for spec in have:
-        if "," in spec:
-            return None
-        idx = first.get_field_index(spec)
-        if idx < 0:
-            return None
-        t = first.field(idx).type
+        idx = schema.get_field_index(spec)
+        if "," in spec or idx < 0:
+            return False
+        t = schema.field(idx).type
         if not (
             pa.types.is_integer(t)
             or pa.types.is_string(t)
             or pa.types.is_large_string(t)
         ):
-            return None
-    out_f: list[str] = []
-    out_c: list[str] = []
-    out_b: list[bytes] = []
-    for relf in rels:
-        tbl = pq.read_table(
-            os.path.join(table_dir, relf), columns=list(have)
+            return False
+    return True
+
+
+def _bloom_build_driver(
+    spark: SparkSession,
+    table_dir: str,
+    rels: list[str],
+    have: list[str],
+    schema,
+    m: int,
+    k: int,
+    rel: str,
+) -> str:
+    """Driver builder for a commit of <= _BLOOM_DRIVER_ROWS_MAX staged
+    rows: the sidecar is INDEX metadata over local KB-scale parquet,
+    the same driver-metadata discipline as _stage_files /
+    _load_bloom_entries. The only branch is where the values come
+    from: pyarrow columns when _bloom_arrow_keys allows (zero Spark
+    jobs), else ONE collect of _bloom_value_expr over the staged files.
+    Either way one fold hashes them through _bloom_words, skipping
+    NULL values and emitting a (file, spec) bitmap only when it saw a
+    non-NULL value — the distributed builder's rules exactly."""
+    import pyarrow.parquet as pq
+
+    vals: dict[tuple[str, str], list] = {}
+    if _bloom_arrow_keys(schema, have):
+        for f in rels:
+            tbl = pq.read_table(os.path.join(table_dir, f), columns=list(have))
+            for spec in have:
+                vals[(f, spec)] = tbl.column(spec).to_pylist()
+    else:
+        sel = _pinned_parquet_read(
+            spark, [os.path.join(table_dir, r) for r in rels]
+        ).select(
+            _file_rel_expr(table_dir).alias("__f"),
+            *[
+                _bloom_value_expr(spec.split(",")).alias(f"v{j}")
+                for j, spec in enumerate(have)
+            ],
         )
-        for spec in have:
-            buf = bytearray(mb)
-            seen = False
-            for v in tbl.column(spec).to_pylist():
-                if v is None:
-                    continue
-                seen = True
-                sv = str(v)
-                for i in range(k):
-                    pos = (
-                        int(
-                            hashlib.md5(f"{i}:{sv}".encode()).hexdigest()[:8],
-                            16,
-                        )
-                        % m
-                    )
-                    buf[pos >> 3] |= 1 << (pos & 7)
-            if seen:
-                out_f.append(relf)
-                out_c.append(spec)
-                out_b.append(bytes(buf))
-    dirp = os.path.join(table_dir, rel)
-    os.makedirs(dirp, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "f": pa.array(out_f, pa.string()),
-                "col": pa.array(out_c, pa.string()),
-                "m": pa.array([m] * len(out_f), pa.int32()),
-                "k": pa.array([k] * len(out_f), pa.int32()),
-                "bits": pa.array(out_b, pa.binary()),
-            }
-        ),
-        os.path.join(dirp, "part-00000.parquet"),
-    )
-    return rel
+        for row in sel.collect():
+            for j, spec in enumerate(have):
+                vals.setdefault((row["__f"], spec), []).append(row[f"v{j}"])
+    entries = []
+    for (f, spec), vs in vals.items():
+        buf = bytearray(m // 8)
+        seen = False
+        for v in vs:
+            if v is None:
+                continue
+            seen = True
+            for w in _bloom_words(v, k):
+                pos = w % m
+                buf[pos >> 3] |= 1 << (pos & 7)
+        if seen:
+            entries.append((f, spec, bytes(buf)))
+    return _bloom_write_sidecar(table_dir, rel, m, k, entries)
 
 
 def _bloom_write_sidecar(
     table_dir: str, rel: str, m: int, k: int, entries: list[tuple]
 ) -> str:
     """Write (f, col, m, k, bits) sidecar rows driver-side (pyarrow) —
-    shared tail of the two tiny-commit builder paths."""
+    the driver builder's output."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1318,248 +1331,74 @@ def _bloom_write_sidecar(
     return rel
 
 
-def _bloom_build_driver_jvm_vals(
+def _bloom_build_distributed(
     spark: SparkSession,
     table_dir: str,
     rels: list[str],
     have: list[str],
     m: int,
     k: int,
-    mb: int,
     rel: str,
-) -> str | None:
-    """Tiny-commit path for specs the pure-driver builder declines
-    (composite keys, exotic dtypes): ONE collect of the canonical
-    bloom VALUES — spelled by the JVM contract expression
-    (_bloom_value_expr), so there is zero Python-twin spelling risk —
-    then the hashlib position fold and the sidecar write run on the
-    driver. Replaces the distributed fold's mapInPandas + grouped
-    OR-reduce + distributed write (several fixed Spark jobs) with one
-    small job for a <=64k-row commit; the fold is byte-identical to
-    the distributed hashlib fold (same skip-None rule, same
-    emit-only-when-seen rule), pinned by the builder-equality test."""
-    import hashlib
+) -> str:
+    """Distributed builder for a commit above _BLOOM_DRIVER_ROWS_MAX
+    staged rows: one column-pruned pass whose k bit positions per row
+    are computed IN THE JVM (_bloom_positions_expr), so the Python
+    boundary carries only (file, col, p0..pk) ints and the mapInPandas
+    fold is a vectorized numpy scatter — no per-row Python hashing
+    (guide §4), the term that dominates at 100 TB. A groupBy(f, col)
+    OR-reduce merges per-partition bitmaps; only bitmap-sized rows
+    ever shuffle."""
+    import pandas as pd
 
+    mb = m // 8
     src = _pinned_parquet_read(
         spark, [os.path.join(table_dir, r) for r in rels]
     )
-    sel = src.select(
-        _file_rel_expr(table_dir).alias("__f"),
-        *[
-            _bloom_value_expr(spec.split(",")).alias(f"v{j}")
-            for j, spec in enumerate(have)
-        ],
-    )
-    acc: dict[tuple[str, str], bytearray] = {}
-    for row in sel.collect():
-        f = row["__f"]
-        for j, spec in enumerate(have):
-            val = row[f"v{j}"]
-            if val is None:
-                continue
-            buf = acc.get((f, spec))
-            if buf is None:
-                buf = acc[(f, spec)] = bytearray(mb)
-            for i in range(k):
-                pos = (
-                    int(
-                        hashlib.md5(f"{i}:{val}".encode()).hexdigest()[:8],
-                        16,
-                    )
-                    % m
-                )
-                buf[pos >> 3] |= 1 << (pos & 7)
-    return _bloom_write_sidecar(
-        table_dir,
-        rel,
-        m,
-        k,
-        [(f, c, bytes(b)) for (f, c), b in acc.items()],
-    )
-
-
-def _write_bloom_index(
-    spark: SparkSession,
-    table_dir: str,
-    rels: list[str],
-    cols: list[str],
-    new_meta: dict,
-    name,
-) -> str | None:
-    """Build per-(file, column) bloom bitmaps for the given NEW files
-    and write them as the commit's index dataset ``bloom/<name>/``
-    (version number or staging transaction token).
-    SIZE-ADAPTIVE, three regimes (all byte-identical, pinned by
-    test_jvm_position_builder_matches_hashlib_reference):
-
-    - tiny commits (total staged rows <= _BLOOM_VECTORIZE_MIN_ROWS,
-      single-column int/string specs): built ON THE DRIVER with
-      pyarrow + hashlib, zero Spark jobs (_bloom_build_driver) — the
-      sidecar is index metadata and a whole Spark job (2 Python
-      boundaries + shuffle + write) per KB-scale commit was measured
-      at ~1s of pure fixed cost.
-    - big commits (rows_max >= _BLOOM_VECTORIZE_MIN_ROWS): one
-      column-pruned distributed pass; the k md5 bit positions per row
-      are computed IN THE JVM (codegen md5 + conv — bit-identical to
-      the hashlib probe contract: same "{i}:" prefix, same
-      first-8-hex-chars word, same % m), so the Python boundary
-      carries only (file, col, p0..pk) ints and the mapInPandas fold
-      is a pure vectorized numpy scatter — no per-row Python hashing
-      (guide §4). This is the path that matters at 100 TB: the
-      per-row hashing term dominates there.
-    - in between, or when the driver path declines (composite specs /
-      exotic dtypes): the distributed pass with the per-row hashlib
-      fold. The JVM-position plan (explode + 4x md5/conv exprs)
-      carries a fixed per-commit cost a same-boot A/B put at
-      ~+0.15s/commit, which outweighs the per-row win below ~64k
-      rows.
-
-    The distributed passes end in a groupBy(f, col) OR-reduce merging
-    per-partition bitmaps; only bitmap-sized rows ever shuffle.
-    Returns the index's rel path, or None if there is nothing to do."""
-    import pandas as pd
-
-    if not rels or not cols:
-        return None
-    # column names from the parquet FOOTER, driver-side — a plain
-    # spark.read.parquet here launched one schema-inference Spark job
-    # per bloom-carrying commit just to list columns (round-12,
-    # measured via scripts/job_ledger.py)
-    import pyarrow.parquet as pq
-
-    probe_cols = set(
-        pq.ParquetFile(
-            _first_parquet_file(os.path.join(table_dir, rels[0]))
-        ).schema_arrow.names
-    )
-    have = [
-        spec
-        for spec in cols
-        if all(p in probe_cols for p in spec.split(","))
-    ]
-    if not have:
-        return None
-    rows_max = max(new_meta.get(rel, {}).get("rows", 0) for rel in rels)
-    m, k = _bloom_m_for(rows_max), _BLOOM_K
-    mb = m // 8
-    rel = os.path.join("bloom", name if isinstance(name, str) else f"v{name}")
-    total_rows = sum(new_meta.get(r, {}).get("rows", 0) for r in rels)
-    if total_rows <= _BLOOM_VECTORIZE_MIN_ROWS:
-        got = _bloom_build_driver(table_dir, rels, have, m, k, mb, rel)
-        if got is not None:
-            return got
-        # composite/exotic specs: one collect of JVM-spelled values,
-        # driver fold (round-11 fourth regime — see the function doc)
-        got = _bloom_build_driver_jvm_vals(
-            spark, table_dir, rels, have, m, k, mb, rel
-        )
-        if got is not None:
-            return got
-
-    def _positions(spec: str):
-        val = _bloom_value_expr(spec.split(","))
-        return [
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}:"), val).cast("binary")),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % m
-            ).cast("int")
-            for i in range(k)
-        ]
-
-    src = _pinned_parquet_read(
-        spark, [os.path.join(table_dir, rel) for rel in rels]
-    )
-    if rows_max >= _BLOOM_VECTORIZE_MIN_ROWS:
-        # long format: one row per input row per covered spec, k FLAT
-        # int position columns (no per-row arrays — Arrow ships plain
-        # int32 vectors, the fold reads whole columns). NULL-keyed
-        # rows are dropped exactly like the Python fold's
-        # `val is None` skip (concat/md5 propagate NULL, so p0 is
-        # NULL iff val was).
-        df = (
-            src.select(
-                _file_rel_expr(table_dir).alias("__f"),
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(spec).alias("col"),
-                                *[
-                                    p.alias(f"p{i}")
-                                    for i, p in enumerate(_positions(spec))
-                                ],
-                            )
-                            for spec in have
-                        ]
-                    )
-                ).alias("e"),
-            )
-            .select("__f", "e.*")
-            .where(F.col("p0").isNotNull())
-        )
-
-        def fold(batches):
-            import numpy as np
-
-            acc: dict[tuple[str, str], "np.ndarray"] = {}
-            for pdf in batches:
-                for (f, c), sub in pdf.groupby(["__f", "col"], sort=False):
-                    buf = acc.get((f, c))
-                    if buf is None:
-                        buf = acc[(f, c)] = np.zeros(mb, dtype=np.uint8)
-                    pos = np.concatenate(
-                        [sub[f"p{i}"].to_numpy(np.int64) for i in range(k)]
-                    )
-                    np.bitwise_or.at(
-                        buf,
-                        pos >> 3,
-                        np.left_shift(1, pos & 7).astype(np.uint8),
-                    )
-            out = [(f, c, b.tobytes()) for (f, c), b in acc.items()]
-            yield pd.DataFrame(out, columns=["f", "col", "bits"])
-
-    else:
-        df = src.select(
-            _file_rel_expr(table_dir).alias("__f"),
+    # long format: one row per input row per covered spec, k FLAT int
+    # position columns (no per-row arrays — Arrow ships plain int32
+    # vectors, the fold reads whole columns). NULL-keyed rows drop
+    # exactly like the driver fold's NULL skip (concat/md5 propagate
+    # NULL, so p0 is NULL iff the value was).
+    per_spec = [
+        F.struct(
+            F.lit(spec).alias("col"),
             *[
-                _bloom_value_expr(spec.split(",")).alias(spec)
-                for spec in have
+                p.alias(f"p{i}")
+                for i, p in enumerate(
+                    _bloom_positions_expr(_bloom_value_expr(spec.split(",")), m, k)
+                )
             ],
         )
+        for spec in have
+    ]
+    df = (
+        src.select(
+            _file_rel_expr(table_dir).alias("__f"),
+            F.explode(F.array(*per_spec)).alias("e"),
+        )
+        .select("__f", "e.*")
+        .where(F.col("p0").isNotNull())
+    )
 
-        def fold(batches):
-            import hashlib
+    def fold(batches):
+        import numpy as np
 
-            acc: dict[tuple[str, str], bytearray] = {}
-            for pdf in batches:
-                for c in have:
-                    for f, val in zip(pdf["__f"], pdf[c]):
-                        if val is None:
-                            continue
-                        buf = acc.get((f, c))
-                        if buf is None:
-                            buf = acc[(f, c)] = bytearray(mb)
-                        for i in range(k):
-                            pos = (
-                                int(
-                                    hashlib.md5(
-                                        f"{i}:{val}".encode()
-                                    ).hexdigest()[:8],
-                                    16,
-                                )
-                                % m
-                            )
-                            buf[pos >> 3] |= 1 << (pos & 7)
-            out = [(f, c, bytes(b)) for (f, c), b in acc.items()]
-            yield pd.DataFrame(out, columns=["f", "col", "bits"])
+        acc: dict[tuple[str, str], "np.ndarray"] = {}
+        for pdf in batches:
+            for (f, c), sub in pdf.groupby(["__f", "col"], sort=False):
+                buf = acc.get((f, c))
+                if buf is None:
+                    buf = acc[(f, c)] = np.zeros(mb, dtype=np.uint8)
+                pos = np.concatenate(
+                    [sub[f"p{i}"].to_numpy(np.int64) for i in range(k)]
+                )
+                np.bitwise_or.at(
+                    buf,
+                    pos >> 3,
+                    np.left_shift(1, pos & 7).astype(np.uint8),
+                )
+        out = [(f, c, b.tobytes()) for (f, c), b in acc.items()]
+        yield pd.DataFrame(out, columns=["f", "col", "bits"])
 
     def orred(pdf):
         import numpy as np
@@ -1583,6 +1422,52 @@ def _write_bloom_index(
     )
     agg.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
     return rel
+
+
+def _write_bloom_index(
+    spark: SparkSession,
+    table_dir: str,
+    rels: list[str],
+    cols: list[str],
+    new_meta: dict,
+    name,
+) -> str | None:
+    """Build per-(file, column) bloom bitmaps for the given NEW files
+    and write them as the commit's index dataset ``bloom/<name>/``
+    (version number or staging transaction token).
+
+    ``rels`` are the commit's staged parquet FILES as _stage_files
+    listed them: one commit, one schema. So the first file's footer,
+    read once on the driver, gives both the covered specs and the
+    driver builder's dtype check — no schema-inference job (a plain
+    spark.read.parquet here cost one per bloom-carrying commit,
+    round-12).
+
+    Two builders with one size switch, byte-identical (pinned by
+    test_jvm_position_builder_matches_hashlib_reference and
+    test_composite_tiny_builder_matches_distributed_fold): total
+    staged rows <= _BLOOM_DRIVER_ROWS_MAX build on the driver
+    (_bloom_build_driver — a Spark job per KB-scale commit was
+    measured at ~1s of pure fixed cost), anything larger distributed
+    (_bloom_build_distributed). Returns the index's rel path, or None
+    if there is nothing to do."""
+    import pyarrow.parquet as pq
+
+    if not rels or not cols:
+        return None
+    schema = pq.ParquetFile(os.path.join(table_dir, rels[0])).schema_arrow
+    names = set(schema.names)
+    have = [spec for spec in cols if all(p in names for p in spec.split(","))]
+    if not have:
+        return None
+    rows = [new_meta.get(r, {}).get("rows", 0) for r in rels]
+    m, k = _bloom_m_for(max(rows)), _BLOOM_K
+    rel = os.path.join("bloom", name if isinstance(name, str) else f"v{name}")
+    if sum(rows) <= _BLOOM_DRIVER_ROWS_MAX:
+        return _bloom_build_driver(
+            spark, table_dir, rels, have, schema, m, k, rel
+        )
+    return _bloom_build_distributed(spark, table_dir, rels, have, m, k, rel)
 
 
 def _load_bloom_entries(
@@ -1648,17 +1533,6 @@ def _load_bloom_entries(
     return out
 
 
-def _bloom_maybe_contains(bits: bytes, value, m: int, k: int) -> bool:
-    """Driver-side probe: False means DEFINITELY absent from the file."""
-    import hashlib
-
-    for i in range(k):
-        pos = int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:8], 16) % m
-        if not (bits[pos >> 3] >> (pos & 7)) & 1:
-            return False
-    return True
-
-
 def _bloom_manifest_fields(
     spark: SparkSession,
     table_dir: str,
@@ -1701,8 +1575,6 @@ def select_files_point(
     negatives). Digests are computed ONCE per value (not per file —
     the naive loop is |files| x |values| x k md5 calls) and each
     bitmap is tested with one vectorized numpy gather."""
-    import hashlib
-
     import numpy as np
 
     if version is None:
@@ -1744,14 +1616,7 @@ def select_files_point(
     )
     kmax = max((e[1] for e in entries.values()), default=_BLOOM_K)
     H = np.array(
-        [
-            [
-                int(hashlib.md5(f"{i}:{val}".encode()).hexdigest()[:8], 16)
-                for i in range(kmax)
-            ]
-            for val in ordered
-        ],
-        dtype=np.int64,
+        [_bloom_words(val, kmax) for val in ordered], dtype=np.int64
     ).reshape(len(ordered), kmax)
     for rel in survivors:
         e = entries.get((os.path.normpath(rel), col))
@@ -1879,8 +1744,6 @@ def select_files_keys(
     )
 
     def _digests(batches):
-        import hashlib
-
         import pandas as pd
 
         hcols = [f"h{i}" for i in range(kmax)]
@@ -1894,14 +1757,8 @@ def select_files_keys(
                         (True,) + (0,) * kmax + ((0,) if has_raw else ())
                     )
                     continue
-                hs = tuple(
-                    int(
-                        hashlib.md5(f"{i}:{v}".encode()).hexdigest()[:8], 16
-                    )
-                    for i in range(kmax)
-                )
                 tail = (int(rvs.iloc[j]),) if has_raw else ()
-                rows.append((False,) + hs + tail)
+                rows.append((False, *_bloom_words(v, kmax), *tail))
             yield pd.DataFrame(rows, columns=cols)
 
     dig = keys_sdf.mapInPandas(_digests, dig_schema).toPandas()
@@ -2182,7 +2039,8 @@ def _await_predecessors(
     table_dir: str, v: int, stale_after: float = 600.0, timeout: float = 15.0
 ) -> None:
     """Commit-order serialization: block until every LOWER-numbered
-    live claim has committed or vanished. With this wait in front of
+    live claim is released (its committer removes it after publishing
+    the manifest and advancing main.idx.json). With this wait in front of
     every committer's base check, commit order equals claim order, so
     the base check is authoritative and no concurrent commit can be
     silently dropped from forward history (the residual check-to-
@@ -2206,8 +2064,9 @@ def _await_predecessors(
             mm = re.match(r"^\.claim-v(\d+)$", name)
             if not mm or int(mm.group(1)) >= v:
                 continue
-            if os.path.exists(os.path.join(mdir, f"v{mm.group(1)}.json")):
-                continue  # committed; claim removal is racing
+            # a published manifest is not enough: its committer still
+            # rewrites main.idx.json before releasing the claim, and two
+            # idx rewrites at once lose one update (or one's replace)
             try:
                 age = _time.time() - os.path.getmtime(os.path.join(mdir, name))
             except FileNotFoundError:
@@ -2382,8 +2241,7 @@ def delete_where(spark: SparkSession, table_dir: str, condition: str) -> int:
                 "overwrite"
             ).parquet(staging)
             new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
+                table_dir, rel_dir, coalesce_small=not _layout_bound(prev)
             )
         stats = {
             rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
@@ -2531,8 +2389,7 @@ def delete_keys(
                 "overwrite"
             ).parquet(os.path.join(table_dir, rel_dir))
             new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
+                table_dir, rel_dir, coalesce_small=not _layout_bound(prev)
             )
         stats = {
             rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
@@ -2663,8 +2520,7 @@ def update_where(
                 "overwrite"
             ).parquet(os.path.join(table_dir, rel_dir))
             new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
+                table_dir, rel_dir, coalesce_small=not _layout_bound(prev)
             )
         stats = {
             rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
@@ -2772,7 +2628,7 @@ def update_where_mor(
             "overwrite"
         ).parquet(os.path.join(table_dir, rel_dir))
         new_files, new_meta = _stage_files(
-            table_dir, rel_dir, coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols"))
+            table_dir, rel_dir, coalesce_small=not _layout_bound(prev)
         )
         new_pos = matches.select(
             F.col("__f").alias("f"), F.col("__pos").alias("pos")
@@ -3084,7 +2940,7 @@ def merge_into(
             "overwrite"
         ).parquet(staging)
         new_files, new_meta = _stage_files(
-            table_dir, rel_dir, coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols"))
+            table_dir, rel_dir, coalesce_small=not _layout_bound(prev)
         )
         stats = {
             rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
@@ -4035,14 +3891,7 @@ def write_branch(
     )
     new_files, file_meta = _stage_files(
         table_dir, rel_dir,
-        coalesce_small=not (
-            mode == "append"
-            and (
-                head.get("partition_by")
-                or head.get("stats")
-                or head.get("bloom_cols")
-            )
-        ),
+        coalesce_small=not (mode == "append" and _layout_bound(head)),
     )
     stats = {}
     if stats_cols:

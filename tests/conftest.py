@@ -10,7 +10,9 @@ conftest therefore:
   sharded runner uses; >0 parity tests always run), and
 - DESELECTS the measured slowest individual tests listed in
   tests/fast_profile_deselect.json (crash artillery, property fuzz,
-  loopback streams, scale pins — ~4% of tests, ~45% of the wall).
+  loopback streams, scale pins — ~4% of tests, ~45% of the wall),
+  except a test named explicitly on the command line
+  (`pytest tests/test_x.py::test_y` always runs test_y).
 
 Set BESK_FULL_SUITE=1 for the complete suite; scripts/shard_tests.py
 (the parallel full-suite runner) sets it automatically.
@@ -53,6 +55,22 @@ def pytest_report_header(config):
     return "besk FULL suite (BESK_FULL_SUITE=1)"
 
 
+def _named_on_command_line(config, item) -> bool:
+    """Does a ``path::name`` argument select ``item`` (or its
+    parametrized family, or its class)?"""
+    name = item.nodeid.split("::", 1)[1]
+    for arg in config.args:
+        path, sep, want = str(arg).partition("::")
+        if not sep:
+            continue
+        full = os.path.join(str(config.invocation_params.dir), path)
+        if os.path.abspath(full) == str(item.path) and (
+            name == want or name.startswith((want + "[", want + "::"))
+        ):
+            return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
     if not FAST_PROFILE:
         return
@@ -64,7 +82,10 @@ def pytest_collection_modifyitems(config, items):
     keep, drop = [], []
     for item in items:
         mod = os.path.basename(str(item.fspath)).removesuffix(".py")
-        (drop if f"{mod}::{item.name}" in slow else keep).append(item)
+        deselect = f"{mod}::{item.name}" in slow
+        if deselect and _named_on_command_line(config, item):
+            deselect = False
+        (drop if deselect else keep).append(item)
     if drop:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep

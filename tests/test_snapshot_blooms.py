@@ -123,40 +123,30 @@ def test_bloom_string_keys(spark, table):
     assert got.where("uid IN ('user-17','user-350')").count() == 0
 
 
-@pytest.mark.parametrize("path", ["driver", "jvm_vals", "python", "jvm"])
+@pytest.mark.parametrize("path", ["driver", "jvm_vals", "jvm"])
 def test_jvm_position_builder_matches_hashlib_reference(
     spark, table, path, monkeypatch
 ):
-    """The round-11 size-adaptive builder has three regimes: a
-    driver-side pyarrow+hashlib build for tiny commits, the per-row
-    hashlib mapInPandas fold, and the JVM-codegen-position +
-    numpy-scatter path for big commits; the probe side always hashes
-    with hashlib. Pin BYTE equality of the written bitmaps against a
-    pure-Python reference build FOR ALL THREE so the contract can
-    never drift silently — including NULL keys (skipped), string
-    keys, and int keys."""
+    """The size-switched builder has three value paths: the driver
+    builder reading pyarrow columns, the driver builder folding one
+    collect of JVM-spelled values, and the distributed JVM-codegen-
+    position + numpy-scatter builder; the probe side hashes in Python.
+    Pin BYTE equality of the written bitmaps against a pure-Python
+    hashlib reference build FOR ALL THREE so the contract can never
+    drift silently — including NULL keys (skipped), string keys, and
+    int keys. The reference hashes on its own, not through the
+    module's kernel, so a kernel change cannot move both sides."""
     import hashlib
     import os
 
     if path == "jvm":
-        monkeypatch.setattr(SNAP, "_BLOOM_VECTORIZE_MIN_ROWS", 0)
+        monkeypatch.setattr(SNAP, "_BLOOM_DRIVER_ROWS_MAX", 0)
     else:
-        monkeypatch.setattr(SNAP, "_BLOOM_VECTORIZE_MIN_ROWS", 1 << 60)
-        if path == "python":
-            # force the distributed hashlib fold by declining BOTH
-            # tiny-commit builders
-            monkeypatch.setattr(
-                SNAP, "_bloom_build_driver", lambda *a, **k: None
-            )
-            monkeypatch.setattr(
-                SNAP, "_bloom_build_driver_jvm_vals", lambda *a, **k: None
-            )
-        elif path == "jvm_vals":
-            # force the collect-JVM-values driver fold (the tiny-
-            # commit path for composite/exotic specs)
-            monkeypatch.setattr(
-                SNAP, "_bloom_build_driver", lambda *a, **k: None
-            )
+        monkeypatch.setattr(SNAP, "_BLOOM_DRIVER_ROWS_MAX", 1 << 60)
+        if path == "jvm_vals":
+            # force the driver builder's collect-values branch (the
+            # one composite/exotic specs take)
+            monkeypatch.setattr(SNAP, "_bloom_arrow_keys", lambda *a: False)
     df = spark.range(0, 500).selectExpr(
         "CASE WHEN id % 7 = 0 THEN NULL ELSE CONCAT('u-', id) END AS uid",
         "id",
@@ -187,12 +177,12 @@ def test_jvm_position_builder_matches_hashlib_reference(
 def test_composite_tiny_builder_matches_distributed_fold(
     spark, tmp_path, monkeypatch
 ):
-    """Round-11 fourth builder regime: a tiny commit with a COMPOSITE
-    bloom spec builds via one collect of JVM-spelled digests + driver
-    fold. Its sidecar bytes must equal the distributed hashlib fold's
-    byte-for-byte (same data, same spec, NULL key components
-    included) — the spelling contract lives in the JVM expr both
-    ways, so any divergence is a fold bug."""
+    """A tiny commit with a COMPOSITE bloom spec builds on the driver
+    from one collect of JVM-spelled values. Its sidecar bytes must
+    equal the distributed JVM-position builder's byte-for-byte (same
+    data, same spec, NULL key components included) — the spelling
+    contract lives in the JVM expr both ways, so any divergence is a
+    fold or kernel bug."""
     df = spark.range(0, 300).selectExpr(
         "CASE WHEN id % 11 = 0 THEN NULL ELSE id END AS a",
         "CONCAT('s-', id % 13) AS b",
@@ -201,9 +191,7 @@ def test_composite_tiny_builder_matches_distributed_fold(
 
     def build(table, force_distributed):
         if force_distributed:
-            monkeypatch.setattr(
-                SNAP, "_bloom_build_driver_jvm_vals", lambda *a, **k: None
-            )
+            monkeypatch.setattr(SNAP, "_BLOOM_DRIVER_ROWS_MAX", 0)
         SNAP.write_version(df, table, bloom_cols=[("a", "b")])
         m = SNAP._load_manifest(table, 1)
         if force_distributed:
