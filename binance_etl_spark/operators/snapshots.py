@@ -636,6 +636,29 @@ def _enforce_unique(
         )
 
 
+def _staged_gate_df(df: DataFrame, staging: str, cmap: dict) -> DataFrame:
+    """The input of write_version's gates (expectations, unique keys).
+
+    Gate passes are independent actions: running them against ``df``
+    re-executes its whole lineage per pass — for an un-checkpointed
+    aggregation source that doubles or triples the commit's compute.
+    The staged files hold exactly df's rows, so re-read THEM instead
+    (columns mapped back to logical names). Falls back to ``df`` when
+    the parquet round-trip changes the schema (e.g. exotic types)."""
+    try:
+        sdf = _pinned_parquet_read(df.sparkSession, [staging])
+        if cmap:
+            inv = {p: l for l, p in cmap.items()}
+            sdf = sdf.select(*[F.col(c).alias(inv.get(c, c)) for c in sdf.columns])
+        if [(f.name, f.dataType) for f in sdf.schema.fields] == [
+            (f.name, f.dataType) for f in df.schema.fields
+        ]:
+            return sdf
+    except Exception:
+        pass
+    return df
+
+
 def write_version(
     df: DataFrame,
     table_dir: str,
@@ -808,27 +831,9 @@ def write_version(
         new_files, new_meta = _stage_files(
             table_dir, rel_dir, coalesce_small=coalesce_small
         )
-        # Gate passes below (expectations, unique-keys) are independent
-        # actions: running them against ``df`` re-executes its whole
-        # lineage per pass — for an un-checkpointed aggregation source
-        # that doubles or triples the commit's compute. The staged files
-        # hold exactly df's rows, so re-read THEM instead (columns mapped
-        # back to logical names). Falls back to df when the parquet
-        # round-trip changes the schema (e.g. exotic types).
-        gate_df = df
-        try:
-            _sdf = _pinned_parquet_read(df.sparkSession, [staging])
-            if cmap:
-                _inv = {p: l for l, p in cmap.items()}
-                _sdf = _sdf.select(
-                    *[F.col(c).alias(_inv.get(c, c)) for c in _sdf.columns]
-                )
-            if [(f.name, f.dataType) for f in _sdf.schema.fields] == [
-                (f.name, f.dataType) for f in df.schema.fields
-            ]:
-                gate_df = _sdf
-        except Exception:
-            pass
+        # the gates' input, built by the first gate that runs (a table
+        # without expectations or unique keys never pays the re-read)
+        gate_df = None
         new_stats = {}
         if stats_cols:
             # stats are keyed by PHYSICAL names (they describe files);
@@ -887,6 +892,8 @@ def write_version(
             effective_exp = {**prev.get("expectations", {}), **(expectations or {})}
             todo = set(effective_exp) - enforced
             if todo:  # heavy scans stay OUTSIDE the claim window
+                if gate_df is None:
+                    gate_df = _staged_gate_df(df, staging, cmap)
                 _enforce_expectations(gate_df, effective_exp)
                 enforced |= set(effective_exp)
             # unique-key (PK) gate — inherited like expectations; the
@@ -903,6 +910,8 @@ def write_version(
                     raise ValueError(f"unique_keys columns not in data: {missing_uk}")
                 head_now = prior[-1] if prior else None
                 if uk_checked_head != ("head", head_now):
+                    if gate_df is None:
+                        gate_df = _staged_gate_df(df, staging, cmap)
                     _enforce_unique(
                         gate_df,
                         table_dir,

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window as W
 from binance_etl_spark.catalog import fanout, load
 from binance_etl_spark.plans.llm_ops10 import _K, _SQL_GRAMS, _gram_stream
 from binance_etl_spark.plans.registry import register
+from binance_etl_spark.streaming.pipelines import stream_shuffle_partitions
 
 # --- text_substring_spans -------------------------------------------
 
@@ -286,18 +287,15 @@ def stream_ohlcv_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "wm_ohlcv_" + uuid.uuid4().hex[:12]
     # a 13-row stateful stream under a bare session's 200 shuffle
-    # partitions pays ~1200 empty state-store tasks; pin a small
-    # count for the stream and restore after (the quad-bench
-    # discipline — streaming aggs fix partitions at first checkpoint)
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "4")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
+    # partitions pays ~1200 empty state-store tasks; start it with a
+    # small count (streaming aggs fix partitions at first checkpoint)
+    with stream_shuffle_partitions(spark, 4):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .start()
+        )
     try:
         for phase in _WM_PHASES:
             _append(phase)
@@ -322,7 +320,6 @@ def stream_ohlcv_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bench warmups call registered fns repeatedly in one session,
         # so the memory-sink view and the spool dir must not accumulate
         q.stop()
-        spark.conf.set(shuffle_key, prior_shuffle)
         spark.catalog.dropTempView(name)
         shutil.rmtree(os.path.dirname(log), ignore_errors=True)
     schema = (

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from binance_etl_spark.catalog import load
 from binance_etl_spark.operators.asof import asof_join
 from binance_etl_spark.plans.registry import register
+from binance_etl_spark.streaming.pipelines import stream_shuffle_partitions
 
 # Deterministic two-sided late-data tape: (event_ms offset, symbol,
 # id). Watermark delay 10s on both sides; join interval +/-1s. Every
@@ -175,20 +176,18 @@ def _run_stream_join(
         join_type,
     )
     name = prefix.rstrip("_") + "_" + uuid.uuid4().hex[:12]
-    # pin a small stream partition count (the quad-bench discipline —
-    # a ~20-row symmetric hash join under 200 shuffle partitions pays
-    # ~2400 empty state-store tasks per batch) and restore after
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "4")
+    # start with a small stream partition count — a ~20-row symmetric
+    # hash join under 200 shuffle partitions pays ~2400 empty
+    # state-store tasks per batch
     q = None
     try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
+        with stream_shuffle_partitions(spark, 4):
+            q = (
+                joined.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .start()
+            )
         for tphase, dphase in zip(trades_tape, depth_tape):
             _append(tlog, tphase)
             _append(dlog, dphase)
@@ -211,7 +210,6 @@ def _run_stream_join(
         # view and the spool dir must not accumulate
         if q is not None:
             q.stop()
-        spark.conf.set(shuffle_key, prior_shuffle)
         try:
             spark.catalog.dropTempView(name)
         except Exception:

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 from binance_etl_spark.streaming.pipelines import (
     depth_stream,
     stop_all,
+    stream_shuffle_partitions,
     trades_stream,
     write_table_stream,
 )
@@ -70,7 +71,16 @@ def parse_event_id(event_id: str) -> JobSpec:
 def start_jobs(spark: SparkSession, config: dict) -> list[StreamingQuery]:
     """One streaming query per configured event id (the reference's
     one-ws-client-per-id model, factory.py:9-17, made supervised and
-    exactly-once)."""
+    exactly-once).
+
+    Each query serves exactly one symbol, so a depth query's book sync
+    holds one state key: every query starts with ONE state partition
+    instead of the session's ``spark.sql.shuffle.partitions`` (which
+    would open that many state stores per trigger, all but one empty).
+    Trade queries have no stateful operator, so the rule costs them
+    nothing. A restart from an existing checkpoint keeps the count the
+    checkpoint recorded, so older multi-partition checkpoints resume
+    unchanged. The session's own value is left as it was."""
     storage = config.get("storage", {})
     fmt = storage.get("format", "parquet")
     out_root = storage["output_path"]
@@ -105,15 +115,16 @@ def start_jobs(spark: SparkSession, config: dict) -> list[StreamingQuery]:
         if fmt == "bigquery":
             dataset = storage.get("bigquery_dataset", "binance_etl")
             bq_table = f"{dataset}.{spec.market}_{spec.symbol}_{table}"
-        queries.append(
-            write_table_stream(
-                df,
-                os.path.join(out_root, spec.market, spec.symbol, table),
-                os.path.join(ckpt_root, spec.market, spec.symbol, table),
-                fmt=fmt,
-                bq_table=bq_table,
+        with stream_shuffle_partitions(spark, 1):
+            queries.append(
+                write_table_stream(
+                    df,
+                    os.path.join(out_root, spec.market, spec.symbol, table),
+                    os.path.join(ckpt_root, spec.market, spec.symbol, table),
+                    fmt=fmt,
+                    bq_table=bq_table,
+                )
             )
-        )
     return queries
 
 

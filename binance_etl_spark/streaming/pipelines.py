@@ -9,6 +9,8 @@ on stop (base.py:39-45 never flushes, SURVEY.md §2.10).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -52,6 +54,34 @@ def depth_stream(
     )
 
 
+@contextmanager
+def stream_shuffle_partitions(spark: SparkSession, n: int):
+    """Start the streaming queries of this block with ``n`` shuffle
+    (state) partitions, then restore the session's own value.
+
+    A query's stateful operators take their partition count from
+    ``spark.sql.shuffle.partitions`` at the query's first checkpoint
+    and keep it for the checkpoint's life. ``.start()`` clones the
+    session (the ``StreamExecution`` constructor calls
+    ``cloneSession``), so a query started inside the block keeps ``n``
+    while the parent session never does; a ``foreachBatch`` body runs
+    on that clone too, so a sink's own shuffles use ``n`` as well. A
+    restart from an existing checkpoint keeps the count recorded in
+    its offset log, whatever ``n`` is.
+
+    Precondition: the block only starts queries, and no other thread
+    runs work on ``spark`` while it is open — anything else that reads
+    the conf in the meantime sees ``n``.
+    """
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
+
+
 def write_table_stream(
     df: DataFrame,
     out_dir: str,
@@ -69,7 +99,13 @@ def write_table_stream(
     snapshot-log table (operators/snapshots.py): exactly-once via
     batch-id replay tokens, auto-compaction every 8 versions, readers
     get time travel / tags / CDC over the live ingestion table — the
-    lakehouse storage provider."""
+    lakehouse storage provider.
+
+    The query's state partition count is the session's
+    ``spark.sql.shuffle.partitions`` at its first start. The runner
+    starts each of its one-symbol queries with one state partition
+    (`stream_shuffle_partitions`); a restart from an existing
+    checkpoint keeps the count the checkpoint recorded."""
     if fmt == "snapshot":
         from binance_etl_spark.operators.snapshots import foreach_batch_snapshot
 

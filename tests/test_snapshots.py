@@ -1273,3 +1273,48 @@ def test_batch_replay_check_heals_without_idx(spark, tmp_path):
     body(_df(spark, 0, 10), 0)  # replay with no idx: manifest scan
     assert SNAP.read_version(spark, table).count() == 10
     assert len(SNAP.versions(table)) == 1
+
+
+@pytest.mark.parametrize("gate", ["expectation", "unique_keys"])
+def test_gate_inherited_on_rebase_is_enforced(spark, tmp_path, monkeypatch, gate):
+    """The gates' staged re-read is built lazily: a commit to a table
+    without gates never builds it, and a rebase onto a new head that
+    brings an expectation or unique keys still gets it — the gate runs
+    and refuses the violating rows."""
+    table = str(tmp_path / "lazy_gate")
+    SNAP.write_version(_df(spark, 0, 10), table)
+
+    built = []
+    real_gate_df = SNAP._staged_gate_df
+
+    def counting_gate_df(*args):
+        built.append(1)
+        return real_gate_df(*args)
+
+    monkeypatch.setattr(SNAP, "_staged_gate_df", counting_gate_df)
+    SNAP.write_version(_df(spark, 10, 20), table)
+    assert built == []  # no gate declared: no re-read
+
+    real_claim = SNAP._claim_version
+    raced = []
+
+    def claim_after_racer(table_dir, prior):
+        if not raced:  # a racer commits a gated head before the first claim
+            raced.append(1)
+            if gate == "expectation":
+                SNAP.add_constraint(spark, table, "v_even", "v % 2 = 0")
+            else:
+                SNAP.write_version(_df(spark, 100, 101), table, unique_keys=["id"])
+        return real_claim(table_dir, prior)
+
+    monkeypatch.setattr(SNAP, "_claim_version", claim_after_racer)
+    bad = (
+        spark.createDataFrame([(50, 1)], "id LONG, v LONG")
+        if gate == "expectation"
+        else _df(spark, 100, 101)
+    )
+    with pytest.raises(ValueError):
+        SNAP.write_version(bad, table)
+    assert raced and built  # the rebase built the gate input and enforced it
+    racer_rows = 0 if gate == "expectation" else 1
+    assert SNAP.count_rows(table) == 20 + racer_rows  # nothing of ``bad`` landed
