@@ -32,6 +32,7 @@ the crash-before-commit invisibility property.
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import json
 import os
@@ -80,8 +81,11 @@ def _update_main_idx(
     table_dir: str, v: int, is_main: bool, batch_key: str | None = None
 ) -> None:
     """Advance the main-line index through version ``v`` — called from
-    _commit_manifest while the committer still holds its claim, so
-    updates are strictly serialized (commit order == claim order).
+    _commit_manifest while the committer still holds its claim. Claims
+    serialize committers only up to _await_predecessors' timeout, so
+    the read-modify-write also holds an exclusive lock on
+    ``_manifests/.idx.lock``: two committers past that timeout would
+    otherwise clash on the tmp file or drop one's version from the idx.
     Atomic replace; a crash between the manifest publish and this
     update only leaves the idx one version behind, which the tail scan
     in main_versions heals on the next read. Streaming replay tokens
@@ -97,6 +101,14 @@ def _update_main_idx(
     past it. It must still be inserted — an early return would drop a
     committed main version (a delete, say) from idx["main"] forever,
     while main_versions' tail scan only covers v > last."""
+    with open(os.path.join(_manifest_dir(table_dir), ".idx.lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        _advance_main_idx(table_dir, v, is_main, batch_key)
+
+
+def _advance_main_idx(
+    table_dir: str, v: int, is_main: bool, batch_key: str | None
+) -> None:
     idx = _load_main_idx(table_dir)
     if idx is None:
         # missing/corrupt idx on a table that may already have history:
@@ -1051,8 +1063,8 @@ def _commit_manifest(table_dir: str, v: int, manifest: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     os.replace(tmp, os.path.join(mdir, f"v{v}.json"))  # atomic commit
-    # advance the main-line checkpoint BEFORE releasing the claim:
-    # claims serialize committers, so idx writes never interleave.
+    # advance the main-line checkpoint BEFORE releasing the claim, so
+    # waiters on this claim see the idx already holding v.
     # Batch-id keys are lane-namespaced: branch sinks run their own
     # batch counters, so their replay tokens must never shadow main's.
     bid = manifest.get("batch_id")

@@ -110,6 +110,15 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # Python workers fork from pyspark's own daemon, run through
+    # worker_daemon.py: before Python 3.13 every task's
+    # importlib.invalidate_caches() re-read each zip archive on the worker
+    # path (pyspark.zip, py4j, the spark-core jar) at ~250 ms per task,
+    # which bounded every stream trigger and pandas-UDF stage from below;
+    # the daemon re-reads an archive only when its file changed. Needs the
+    # package importable by every worker, which ensure_protobuf already
+    # guarantees (the replay reader and book-sync closures rely on it too).
+    "spark.python.daemon.module": "binance_etl_spark.worker_daemon",
 }
 
 

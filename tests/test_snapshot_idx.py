@@ -73,3 +73,42 @@ def test_idx_rebuild_repopulates_batch_ids(spark, tmp_path):
     assert SNAP.write_branch(df, t, "audit", batch_id=0) == v_br0
     n_after = SNAP.read_version(spark, t).count()
     assert n_after == n_before + 4  # only the one real append landed
+
+
+def test_concurrent_idx_updates_lose_no_version(tmp_path):
+    """Claims serialize committers only up to _await_predecessors'
+    timeout, so two committers can advance main.idx.json at once; every
+    version each of them records must survive the other's rewrite."""
+    import os
+    import sys
+    import threading
+
+    from binance_etl_spark.operators import snapshots as SNAP
+
+    t = str(tmp_path / "tbl")
+    os.makedirs(SNAP._manifest_dir(t))
+    SNAP._update_main_idx(t, 1, is_main=True)
+    writers, per_writer = 8, 25
+    errors: list[BaseException] = []
+
+    def advance(w: int) -> None:
+        try:
+            for i in range(per_writer):
+                SNAP._update_main_idx(t, 2 + w + writers * i, is_main=True)
+        except Exception as exc:  # reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=advance, args=(w,)) for w in range(writers)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    idx = SNAP._load_main_idx(t)
+    assert idx["main"] == list(range(1, 2 + writers * per_writer))
