@@ -228,9 +228,8 @@ def _wm_values_sql() -> str:
     tags=("streaming", "window", "agg", "market"),
 )
 def stream_ohlcv_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from binance_etl_spark.sources.replay import register as _reg_replay
+    from binance_etl_spark.sources.replay import stream_replay
 
-    _reg_replay(spark)
     log = os.path.join(
         tempfile.mkdtemp(prefix="besk_wm_ohlcv_"), "trades.jsonl"
     )
@@ -257,12 +256,7 @@ def stream_ohlcv_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + "\n"
                 )
 
-    sdf = (
-        spark.readStream.format("replay")
-        .option("path", log)
-        .option("maxFramesPerBatch", "100000")
-        .load()
-    )
+    sdf = stream_replay(spark, log, 100000)
     # e/E collide case-insensitively in one from_json schema (the
     # round-5 frame-parse gotcha) — get_json_object per field instead.
     parsed = sdf.select(

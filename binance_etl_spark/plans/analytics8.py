@@ -122,9 +122,8 @@ def _run_stream_join(
     save/restore and teardown wrap the WHOLE lifecycle — including a
     .start() that throws — and the memory-sink name is unique per
     invocation so repeated bench/parity calls never collide."""
-    from binance_etl_spark.sources.replay import register as _reg_replay
+    from binance_etl_spark.sources.replay import stream_replay
 
-    _reg_replay(spark)
     root = tempfile.mkdtemp(prefix=prefix)
     tlog = os.path.join(root, "trades.jsonl")
     dlog = os.path.join(root, "depth.jsonl")
@@ -151,12 +150,7 @@ def _run_stream_join(
                 )
 
     def _side(log: str, tag: str, delay_ms: int):
-        sdf = (
-            spark.readStream.format("replay")
-            .option("path", log)
-            .option("maxFramesPerBatch", "100000")
-            .load()
-        )
+        sdf = stream_replay(spark, log, 100000)
         return sdf.select(
             F.get_json_object("frame", "$.s").alias(f"{tag}_sym"),
             F.timestamp_millis(

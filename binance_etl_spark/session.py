@@ -19,9 +19,10 @@ import sys
 from pyspark.sql import SparkSession
 
 _VENDOR_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
-# built from jvm/NioLocalFileSystem.java by scripts/build_jvm.py
-_JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
+# built from jvm/*.java by scripts/build_jvm.py
+_JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "engine.jar")
 _NIO_FS = "binance_etl_spark.jvm.NioLocalFileSystem"
+_REPLAY_SOURCE = "binance_etl_spark.jvm.ReplaySource"
 
 
 def ensure_protobuf() -> str:
@@ -42,7 +43,7 @@ def ensure_protobuf() -> str:
     # nor its cwd, so a driver launched from outside the repo root
     # (e.g. the sharded test runner's per-worker scratch cwd) would
     # hit `No module named 'binance_etl_spark'` inside every
-    # replay/snapshot scan.
+    # snapshot-changes scan and book-sync task.
     _pkg_parent = os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     )
@@ -120,7 +121,7 @@ ENGINE_CONF: dict[str, str] = {
     # which bounded every stream trigger and pandas-UDF stage from below;
     # the daemon re-reads an archive only when its file changed. Needs the
     # package importable by every worker, which ensure_protobuf already
-    # guarantees (the replay reader and book-sync closures rely on it too).
+    # guarantees (the book-sync closures rely on it too).
     "spark.python.daemon.module": "binance_etl_spark.worker_daemon",
 }
 
@@ -135,11 +136,27 @@ ENGINE_CONF: dict[str, str] = {
 # and permissions on disk are unchanged. Left unset, Java's ServiceLoader
 # picks Hive's ProxyLocalFileSystem from hive-exec. A cluster submit keeps
 # the stock binding: its executors need not have the jar at this path.
+# The classpath entry also carries the jar's `replay` data source, since
+# local executors run in the driver JVM.
 LOCAL_FS_CONF: dict[str, str] = {
     "spark.driver.extraClassPath": _JVM_JAR,
     "spark.hadoop.fs.file.impl": f"{_NIO_FS}$Local",
     "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_NIO_FS}$LocalFs",
 }
+
+
+def ensure_engine_jar(spark: SparkSession) -> None:
+    """Make the engine jar's classes reachable in a session that
+    ``get_spark`` did not build (a bare ``SparkSession.builder``): the jar
+    joins the driver's context classloader, which the py4j threads and the
+    local executors share, and is shipped to any other executors. Costs one
+    py4j call once the jar is there."""
+    jvm = spark._jvm
+    if jvm.org.apache.spark.util.Utils.classIsLoadable(_REPLAY_SOURCE):
+        return
+    loader = jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+    loader.addURL(jvm.java.io.File(_JVM_JAR).toURI().toURL())
+    spark.sparkContext._jsc.sc().addJar(_JVM_JAR)
 
 
 def get_spark(app_name: str = "binance-etl-spark", extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -155,6 +172,10 @@ def get_spark(app_name: str = "binance-etl-spark", extra_conf: dict[str, str] | 
     if not os.environ.get("SPARK_MASTER") and "SPARK_CONNECT_MODE_ENABLED" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
         conf.update(LOCAL_FS_CONF)
+    elif "SPARK_CONNECT_MODE_ENABLED" not in os.environ:
+        # a configured master: the jar's `replay` source, which production
+        # ingest reads, reaches the driver and every executor this way
+        conf["spark.jars"] = _JVM_JAR
     for k, v in conf.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

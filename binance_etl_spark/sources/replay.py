@@ -1,251 +1,42 @@
-"""Replay source: PySpark 4 Python Data Source over JSONL frame logs.
+"""Replay source: JSONL frame spools read by the engine jar's ``replay``
+data source (``jvm/ReplaySource.java``).
 
-Batch and streaming readers share one frame iterator; the stream
-reader's offset is the frame index (deterministic replay — SURVEY.md
-§4.2 custom-source decision; the reference's live socket loop is
-base.py:47-60). A live websocket source is this reader with the frame
-iterator swapped for a socket drain; it is deliberately NOT built into
-the test path (no network in CI).
+Each spool line is one ``{"frame", "arrival_ms", "seq"}`` object, read as
+``FRAME_SCHEMA``. The reference processes each websocket frame as it
+arrives (base.py:47-60); the engine lands frames in a spool and streams
+the spool, so a restart replays from a checkpointed position in the log
+(SURVEY.md §4.2 custom-source decision). A live websocket source is the
+same reader over a spool its socket drain appends to (websocket.py).
 
-Scale: one fixture file maps to one input partition per micro-batch
-(ordered replay requires per-stream ordering); many (market, symbol)
-streams parallelize across partitions, which is exactly the
-reference's one-thread-per-stream model (factory.py:9-17) made
-cluster-wide.
+Stream offsets are ``{"index": n, "pos": p}``: ``n`` frames precede the
+point and ``p`` is its byte offset, so a trigger reads only the bytes past
+its start and planning never rescans the log. Checkpoints holding the
+older ``{"index": n}`` form resume (the position is found by one scan).
+A stream admits only newline-terminated lines, so a spool caught
+mid-append serves its partial last line once it is complete. The first
+batch of a query run catches up to the log head; each later batch admits
+at most ``maxFramesPerBatch`` frames (the engine twin of the reference's
+batch_size flush trigger, storage.py:22-36), counted from the batch's
+start offset, so every run plans the same batch sequence.
+
+Scale: a batch splits into byte-range partitions of ``linesPerPartition``
+lines. Replay order is data (``seq``), not partition order: every ordered
+consumer sorts by seq (book sync does in its state processor), and
+many (market, symbol) streams parallelize across queries, the reference's
+one-thread-per-stream model (factory.py:9-17) made cluster-wide.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
-
-from binance_etl_spark.schemas import FRAME_SCHEMA
-
-
-@dataclass
-class _Range(InputPartition):
-    path: str
-    start: int
-    end: int  # exclusive frame index
-
-
-_ARROW_BATCH = 4096
-
-
-def _read_lines(path: str, start: int, end: int):
-    """Yield pyarrow RecordBatches (the fast path for Python data
-    sources — per-row tuple yielding serializes one row at a time and
-    caps throughput at a few k rows/s).
-
-    The line range is decoded with pyarrow's C++ JSON reader (one call
-    per slab, no per-line Python json.loads); a malformed or
-    wrong-schema slab falls back to the per-line Python path so replay
-    logs with stray lines still load.
-    """
-    import pyarrow as pa
-
-    with open(path) as f:
-        lines = [line for i, line in enumerate(f) if start <= i < end]
-    if not lines:
-        return
-
-    try:
-        from pyarrow import json as pa_json
-
-        schema = pa.schema(
-            [("frame", pa.string()), ("arrival_ms", pa.int64()), ("seq", pa.int64())]
-        )
-        table = pa_json.read_json(
-            pa.BufferReader("".join(lines).encode()),
-            parse_options=pa_json.ParseOptions(explicit_schema=schema),
-        ).select(["frame", "arrival_ms", "seq"])
-        yield from table.to_batches(max_chunksize=_ARROW_BATCH)
-        return
-    except Exception:
-        pass  # fall through to the tolerant per-line path
-
-    frames: list[str] = []
-    arrivals: list[int] = []
-    seqs: list[int] = []
-
-    def flush():
-        batch = pa.record_batch(
-            [pa.array(frames, pa.string()), pa.array(arrivals, pa.int64()), pa.array(seqs, pa.int64())],
-            names=["frame", "arrival_ms", "seq"],
-        )
-        frames.clear()
-        arrivals.clear()
-        seqs.clear()
-        return batch
-
-    for line in lines:
-        rec = json.loads(line)
-        frames.append(rec["frame"])
-        arrivals.append(rec["arrival_ms"])
-        seqs.append(rec["seq"])
-        if len(frames) >= _ARROW_BATCH:
-            yield flush()
-    if frames:
-        yield flush()
-
-
-def _count_lines(path: str) -> int:
-    with open(path) as f:
-        return sum(1 for _ in f)
-
-
-class ReplayBatchReader(DataSourceReader):
-    """Batch scans split into line-range partitions: replay order is
-    data (`seq`), not partition order, so parallel reads are safe —
-    every ordered consumer sorts by seq (e.g. book sync). Line-skip
-    per partition is O(file) — a production log would carry a byte-
-    offset index; frame logs here are small."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.lines_per_partition = int(options.get("linesperpartition", 10000))
-
-    def partitions(self):
-        total = _count_lines(self.path)
-        step = max(1, self.lines_per_partition)
-        return [_Range(self.path, s, min(s + step, total)) for s in range(0, total, step)] or [
-            _Range(self.path, 0, 0)
-        ]
-
-    def read(self, partition: _Range):
-        yield from _read_lines(partition.path, partition.start, partition.end)
-
-
-class ReplayStreamReader(DataSourceStreamReader):
-    """Offset = frame index; maxFramesPerBatch caps each micro-batch
-    (the engine twin of the reference's batch_size flush trigger,
-    storage.py:22-36)."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.max_frames = int(options.get("maxframesperbatch", 3))
-        self.lines_per_partition = int(options.get("linesperpartition", 8192))
-        self._pos = 0
-        self._admitted = 0
-        self._fresh = False
-
-    def initialOffset(self) -> dict:
-        # Only called when no checkpoint exists — safe to pace from 0.
-        self._fresh = True
-        return {"index": 0}
-
-    def latestOffset(self) -> dict:
-        # Pacing happens HERE: the offset Spark commits is whatever we
-        # return, so the cap must bound this value, not partitions().
-        # Two hard constraints shape the branches:
-        # - MONOTONICITY: every value returned must be >= every value
-        #   previously returned or checkpointed; going backward makes
-        #   the engine plan a backward batch and then re-serve frames
-        #   (measured: 10 output rows from a 6-frame log).
-        # - PRE-INITIAL CALL: the engine asks for the latest offset
-        #   once BEFORE initialOffset reveals whether a checkpoint
-        #   exists, and uses the answer as the FIRST batch's end.
-        #   A restart's committed offset is unknown at that moment, so
-        #   the only safe answer is the true log head.
-        # Net semantics: the first batch of a query catches up to the
-        # current log head in one gulp; the cap then bounds admission
-        # for every subsequent trigger (frames arriving while the
-        # query runs — the live-spool case — are paced). Exact
-        # first-batch admission control would need the engine to pass
-        # the start offset into this call, which the Python stream
-        # reader API does not do.
-        # - OFFSET-GATED admission (round-10 determinism fix): pacing
-        #   advances from the end of the last CONSTRUCTED batch (the
-        #   `partitions(start, end)` callback — invoked exactly once
-        #   per micro-batch the engine actually plans), never from the
-        #   previous answer of this call. The engine invokes
-        #   latestOffset more than once per trigger (batch planning
-        #   PLUS processAllAvailable's availability polls, whose count
-        #   is wall-clock timing), so a per-call counter admitted a
-        #   run-dependent number of frames per batch. Keyed to batch
-        #   construction, repeated calls are idempotent and every run
-        #   executes the identical batch sequence. (commit() would be
-        #   the obvious gate, but the engine only commits batch N once
-        #   batch N+1 exists — gating on it deadlocks a drained log.)
-        total = _count_lines(self.path)
-        if self.max_frames <= 0 or not self._fresh:
-            self._pos = max(self._pos, total)
-        else:
-            self._pos = max(
-                self._pos,
-                min(self._admitted + self.max_frames, total),
-            )
-        return {"index": self._pos}
-
-    def partitions(self, start: dict, end: dict):
-        # Large catch-up batches (max_frames=0 drains the whole log in
-        # one trigger) split into line-range partitions so the Python
-        # read parallelizes across cores. Replay order is DATA (`seq`),
-        # not partition order: every ordered consumer sorts by seq
-        # (book_sync sorts in its state processor), so this is safe —
-        # and paced batches (max_frames <= lines_per_partition) still
-        # produce exactly one partition.
-        s, e = start["index"], end["index"]
-        # the admission gate: one advance per batch the engine plans
-        # (idempotent under re-calls for the same batch — retries and
-        # WAL replays pass the same `end`)
-        self._admitted = max(self._admitted, e)
-        step = max(1, self.lines_per_partition)
-        return [
-            _Range(self.path, i, min(i + step, e)) for i in range(s, e, step)
-        ] or [_Range(self.path, s, e)]
-
-    def read(self, partition: _Range):
-        yield from _read_lines(partition.path, partition.start, partition.end)
-
-    def commit(self, end: dict) -> None:
-        # After a checkpoint restart the committed offset may be ahead
-        # of our fresh pacing counter — never re-serve committed frames.
-        self._pos = max(self._pos, end["index"])
-        self._admitted = max(self._admitted, end["index"])
-
-
-class ReplayDataSource(DataSource):
-    """spark.read.format("replay").option("path", ...).load()"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "replay"
-
-    def schema(self) -> str:
-        return FRAME_SCHEMA
-
-    def reader(self, schema) -> ReplayBatchReader:
-        return ReplayBatchReader(self.options)
-
-    def streamReader(self, schema) -> ReplayStreamReader:
-        return ReplayStreamReader(self.options)
-
-
-_REGISTERED: set[str] = set()
-
-
-def register(spark) -> None:
-    # Once per session: re-registration is a driver->Python round trip
-    # (~100ms) that every read_replay call would otherwise pay.
-    key = spark.sparkContext.applicationId
-    if key not in _REGISTERED:
-        spark.dataSource.register(ReplayDataSource)
-        _REGISTERED.add(key)
+from binance_etl_spark.session import ensure_engine_jar
 
 
 def read_replay(spark, path: str, lines_per_partition: int | None = None):
-    """Batch-mode scan of a replay log."""
-    register(spark)
-    r = spark.read.format("replay").option("path", os.fspath(path))
+    """Batch-mode scan of a replay log (the whole file)."""
+    ensure_engine_jar(spark)
+    r = spark.read.format("replay").option("path", os.path.abspath(path))
     if lines_per_partition is not None:
         r = r.option("linesPerPartition", str(lines_per_partition))
     return r.load()
@@ -258,12 +49,12 @@ def stream_replay(
     lines_per_partition: int | None = None,
 ):
     """Streaming scan; offsets checkpoint/restart like any source.
-    `lines_per_partition` sizes the line-range split of large catch-up
-    batches (see ReplayStreamReader.partitions)."""
-    register(spark)
+    `lines_per_partition` sizes the byte-range split of large catch-up
+    batches."""
+    ensure_engine_jar(spark)
     r = (
         spark.readStream.format("replay")
-        .option("path", os.fspath(path))
+        .option("path", os.path.abspath(path))
         .option("maxFramesPerBatch", str(max_frames_per_batch))
     )
     if lines_per_partition is not None:

@@ -95,9 +95,11 @@ class SnapshotStreamReader(DataSourceStreamReader):
         vs = versions(self.table_dir)
         head = vs[-1] if vs else 0
         if self.max_versions > 0:
-            # monotonic pacing with the same pre-initial-call caveat as
-            # ReplayStreamReader: never go below anything already
-            # returned, never past the true head.
+            # monotonic pacing: never go below anything already
+            # returned, never past the true head. The engine asks for
+            # the latest offset once before initialOffset reveals
+            # whether a checkpoint exists, so that first answer must be
+            # safe for a restart too.
             self._floor = min(max(self._floor + self.max_versions, 0), head)
             return {"version": max(self._floor, 0)}
         self._floor = max(self._floor, head)

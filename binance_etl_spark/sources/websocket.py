@@ -7,8 +7,11 @@ SpotWebsocketStreamClient and processes frames on its socket thread
 writes frames to a local JSONL spool file — append-only, one frame per
 line with arrival time stamped at receipt (the reference's
 local_timestamp, base.py:52) — and the engine streams the spool through
-the SAME ReplayStreamReader, so offsets, checkpointing, restart, and
-every downstream operator are identical between live and replay runs.
+the SAME `replay` data source (sources/replay.py), so offsets,
+checkpointing, restart, and every downstream operator are identical
+between live and replay runs. The source admits only newline-terminated
+lines, so a frame the drain writes in several `write()` calls lands
+once it is whole.
 
 No network is touched unless `start_spool` is called; CI/tests use
 replay fixtures only (SURVEY.md §5.2).  binance-connector /

@@ -1,6 +1,7 @@
-"""The engine's `file:` filesystem (jvm/NioLocalFileSystem.java) makes
-the same changes on disk as stock Hadoop without forking `chmod` or
-`readlink`."""
+"""The engine jar: its `file:` filesystem (jvm/NioLocalFileSystem.java)
+makes the same changes on disk as stock Hadoop without forking `chmod` or
+`readlink`, its `replay` data source (jvm/ReplaySource.java) resolves by
+name in every session, and the committed jar is what the sources build."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 
 from binance_etl_spark import session
+from binance_etl_spark.sources import fixtures as FX
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 NIO = session._NIO_FS
@@ -89,9 +91,79 @@ def test_only_a_local_master_binds_file_scheme_to_the_jar(monkeypatch, master):
     bound = {k: b.conf[k] for k in jar_keys if k in b.conf}
     if master:
         assert bound == {}
+        # the jar still reaches the driver and the executors
+        assert b.conf["spark.jars"] == session._JVM_JAR
     else:
         assert bound == session.LOCAL_FS_CONF
+        assert "spark.jars" not in b.conf  # local executors are the driver JVM
     assert all(b.conf[k] == v for k, v in session.ENGINE_CONF.items())
+
+
+def test_format_replay_resolves_without_python_registration(spark, tmp_path):
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().conf()
+    provider = jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource("replay", conf)
+    assert provider.getName() == "binance_etl_spark.jvm.ReplaySource"
+    assert not spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists("replay")
+    log = tmp_path / "frames.jsonl"
+    log.write_text('{"frame": "{}", "arrival_ms": 1, "seq": 0}\n')
+    rows = spark.read.format("replay").option("path", str(log)).load().collect()
+    assert [tuple(r) for r in rows] == [("{}", 1, 0)]
+
+
+_SESSION_PROBE = textwrap.dedent(
+    """
+    import os, sys
+    sys.path.insert(0, {root!r})
+    from pyspark.sql import SparkSession
+    from binance_etl_spark.session import get_spark
+    from binance_etl_spark.sources import fixtures as FX
+    from binance_etl_spark.sources.replay import read_replay, stream_replay
+
+    mode, work = sys.argv[1], sys.argv[2]
+    if mode == "cluster":
+        # a master of its own: executors in separate JVMs
+        spark = get_spark("jar-probe", {{"spark.master": os.environ["SPARK_MASTER"],
+                                         "spark.executor.memory": "512m"}})
+    else:
+        # a bare builder, as a host process that owns the session makes
+        spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    paths = FX.write_fixtures(work)
+    batch = read_replay(spark, paths["trades"]).count()
+    q = stream_replay(spark, paths["depth"], 2).writeStream.format("memory").queryName("probe").start()
+    q.processAllAvailable()
+    q.stop()
+    streamed = spark.table("probe").count()
+    executors = spark.sparkContext._jsc.sc().getExecutorIds().size()
+    fs = spark._jsc.hadoopConfiguration().get("fs.file.impl")
+    print("RESULT", batch, streamed, executors, fs)
+    spark.stop()
+    """
+)
+
+
+@pytest.mark.parametrize("mode", ["cluster", "bare"])
+def test_replay_reads_in_cluster_and_bare_sessions(tmp_path, mode):
+    """A configured master gets the jar through `spark.jars`: a separate
+    executor JVM runs the replay tasks, and `file:` keeps its stock
+    binding. A session built without get_spark gets it on first use."""
+    env = dict(os.environ)
+    env["SPARK_GRAFT_CPUS"] = "1"
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env.pop("SPARK_MASTER", None)
+    if mode == "cluster":
+        env["SPARK_MASTER"] = "local-cluster[1,1,768]"
+    out = subprocess.run(
+        [sys.executable, "-c", _SESSION_PROBE.format(root=ROOT), mode, str(tmp_path / "fx")],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert out.returncode == 0 and lines, out.stderr[-3000:]
+    _, batch, streamed, executors, fs = lines[-1].split(" ")
+    assert (int(batch), int(streamed)) == (len(FX.trade_frames()), len(FX.depth_frames()))
+    assert fs == "None"
+    if mode == "cluster":
+        assert int(executors) == 1
 
 
 def test_set_permission_matches_stock_for_every_rwx_mode(spark, tmp_path):
@@ -236,9 +308,10 @@ def test_committed_jar_is_built_from_the_committed_source(tmp_path):
         check=True, timeout=300,
     )
 
-    def classes(path):
-        with zipfile.ZipFile(path) as z:
-            return {n: z.read(n) for n in z.namelist() if n.endswith(".class")}
-
-    committed = classes(session._JVM_JAR)
-    assert committed and classes(jar) == committed
+    with zipfile.ZipFile(session._JVM_JAR) as z:
+        names = z.namelist()
+    assert "META-INF/services/org.apache.spark.sql.sources.DataSourceRegister" in names
+    sources = {os.path.basename(n).split("$")[0].removesuffix(".class") for n in names if n.endswith(".class")}
+    assert sources == {"NioLocalFileSystem", "ReplaySource"}
+    with open(session._JVM_JAR, "rb") as f:
+        assert jar.read_bytes() == f.read()
