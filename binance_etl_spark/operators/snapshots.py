@@ -37,6 +37,7 @@ import hashlib
 import json
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -376,8 +377,12 @@ def _footer_min_max(meta, cols: list[str]) -> dict:
             if st is None or not st.has_min_max:
                 ok = False
                 break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
+            try:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            except Exception:  # noqa: BLE001 — e.g. INT96: arrow cannot decode
+                ok = False
+                break
         if ok and isinstance(lo, (int, float, str)) and not isinstance(lo, bool):
             out[col] = [lo, hi]
     return out
@@ -447,29 +452,126 @@ def _looks_clustered(paths: list[str]) -> bool:
     return False
 
 
-def _compact_staged(staging: str, rels_abs: list[str]) -> bool:
-    """Rewrite a small staged commit's parquet parts into one file,
-    VERIFIED (the read-back of the written file must .equals() the
-    concatenated input tables — schema and values bit-exact) before
-    the parts are removed; any surprise (exotic physical types the
-    arrow round-trip can't keep, inequality) leaves the original
-    layout in place. Returns True iff compacted."""
-    import uuid as _uuid
+# Driver merges run one at a time on ONE thread of their own (the pool
+# starts it on first use). Streaming sinks commit from concurrent py4j
+# callback threads, and pyarrow keeps memory per thread that decodes or
+# encodes: merging on each sink's thread raised the driver's peak RSS
+# in a four-sink ingest run by ~40 MB, merging on one thread by ~14 MB.
+_MERGE_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="snapshot-merge")
+# rows per record batch when a merge's output is checked against its
+# inputs: the check holds two such batches, not two whole files
+_MERGE_CHECK_ROWS = 8192
 
-    import pyarrow as pa
+
+def _same_rows(a, b) -> bool:
+    """True when two record-batch streams hold the same rows in the
+    same order (schema and values bit-exact), whatever their batch
+    boundaries."""
+    a = (x for x in a if x.num_rows)
+    b = (y for y in b if y.num_rows)
+    x, y = next(a, None), next(b, None)
+    while x is not None and y is not None:
+        n = min(x.num_rows, y.num_rows)
+        if not x.slice(0, n).equals(y.slice(0, n)):
+            return False
+        x = x.slice(n) if n < x.num_rows else next(a, None)
+        y = y.slice(n) if n < y.num_rows else next(b, None)
+    return x is None and y is None
+
+
+def _merge_parquet(paths: list[str], out: str) -> bool:
+    """Write the rows of ``paths`` into ONE new parquet file ``out``, in
+    input order, on the driver (pyarrow, no Spark job), VERIFIED before
+    it counts:
+
+    - the output's parquet schema must equal the first input's — the
+      arrow round-trip re-encodes some Spark physical types (INT96
+      timestamps become INT64 nanos, which Spark refuses to read as
+      TIMESTAMP; integer-backed decimals become fixed-length binary),
+      and an arrow-level comparison cannot see that;
+    - the output, read back, must hold the inputs' rows in order,
+      values bit-exact (`_same_rows`).
+
+    The inputs stay in place; the caller decides their fate. Reads go
+    through ``ParquetFile`` (``pq.read_table`` loads pyarrow.dataset, a
+    one-off ~48 MB of driver RSS). The write holds one input at a time
+    and the check streams both sides in small batches, so the driver
+    holds about one copy of the largest input, never the whole set;
+    merges run one at a time on one thread (_MERGE_POOL). Any surprise
+    (schema mismatch, inequality, an exception) removes ``out`` and
+    returns False."""
+    return _MERGE_POOL.submit(_merge_now, paths, out).result()
+
+
+def _merge_now(paths: list[str], out: str) -> bool:
+    """`_merge_parquet`'s body, run on the merge thread."""
     import pyarrow.parquet as pq
 
+    def _batches(files: list[str]):
+        for p in files:
+            yield from pq.ParquetFile(p).iter_batches(
+                batch_size=_MERGE_CHECK_ROWS, use_threads=False
+            )
+
     try:
-        parts = [pq.read_table(p) for p in rels_abs]
-        merged = pa.concat_tables(parts)
-        out = os.path.join(
-            staging, f"part-00000-{_uuid.uuid4().hex}-coalesced.parquet"
+        first = pq.ParquetFile(paths[0])
+        with pq.ParquetWriter(
+            out, first.schema_arrow, compression="snappy"
+        ) as writer:
+            for p in paths:
+                t = pq.ParquetFile(p).read(use_threads=False)
+                if t.num_rows:  # an empty table adds an empty row group
+                    writer.write_table(t)
+                del t  # freed before the next input is read
+        ok = pq.ParquetFile(out).schema.equals(first.schema) and _same_rows(
+            _batches(paths), _batches([out])
         )
-        pq.write_table(merged, out, compression="snappy")
-        if not pq.read_table(out).equals(merged):
-            os.remove(out)
+    except Exception:  # noqa: BLE001 — any surprise keeps the inputs
+        ok = False
+    if not ok and os.path.exists(out):
+        os.remove(out)
+    return ok
+
+
+def _plain_concat(table_dir: str, manifest: dict, rels: list[str]) -> bool:
+    """True when concatenating ``rels`` as stored IS their rewrite under
+    ``manifest``: every file's footer carries the same arrow schema, and
+    it names and types exactly the manifest's physical columns. Files
+    from before an additive evolution lack a column, files from before
+    a drop still hold the retired one; both need the Spark rewrite,
+    which reads through the manifest's schema. Footer reads only."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    want = _physical_schema(manifest)
+    if want is None:
+        return False
+    try:
+        schemas = [
+            pq.ParquetFile(os.path.join(table_dir, rel)).schema_arrow
+            for rel in rels
+        ]
+        if not all(s.equals(schemas[0]) for s in schemas[1:]):
             return False
-    except Exception:
+        got = from_arrow_schema(schemas[0])
+    except Exception:  # noqa: BLE001 — unknown layout: take the Spark path
+        return False
+    return [(f.name, f.dataType) for f in got.fields] == [
+        (f.name, f.dataType) for f in want.fields
+    ]
+
+
+def _compact_staged(staging: str, rels_abs: list[str]) -> bool:
+    """Rewrite a small staged commit's parquet parts into one file
+    (`_merge_parquet`, verified) and remove the parts only once the
+    merge verified; otherwise the original layout stays. Returns True
+    iff compacted."""
+    import uuid as _uuid
+
+    out = os.path.join(
+        staging, f"part-00000-{_uuid.uuid4().hex}-coalesced.parquet"
+    )
+    if not _merge_parquet(rels_abs, out):
         return False
     for p in rels_abs:
         os.remove(p)
@@ -3090,7 +3192,14 @@ def compact(
     cost then scales with the small-file tail the sink produced since
     the last run, never with table size. Fewer than two small files
     means nothing to merge: no commit, the current version is
-    returned unchanged.
+    returned unchanged. A small-file set totalling at most
+    ``_STAGE_COMPACT_MAX_BYTES`` (staging auto-coalesce's "small") is
+    merged on the DRIVER into one file (`_merge_parquet`, verified;
+    no Spark job) when a plain concatenation is the rewrite: no
+    deletion vector, no ``zorder_by``, no partition spec, and every
+    file carrying exactly the manifest's physical schema
+    (`_plain_concat`). Anything else — or a merge that does not
+    verify — takes the Spark rewrite.
 
     Concurrency: claims a version first (so a concurrent vacuum
     treats the staging dir as in-flight, never an orphan) and
@@ -3148,9 +3257,22 @@ def compact(
                 return v_read  # nothing to merge: no-op, no commit
             small_bytes = sum(size(rel) for rel in to_merge)
             n_out = max(1, -(-small_bytes // min_file_bytes))  # ceil
+        # A small tail merges on the driver (_merge_parquet) with no
+        # Spark job: the same "small" rule as staging's auto-coalesce,
+        # and only where a plain concatenation of the files IS the
+        # rewrite — no deletion vector to purge, no layout to rebuild,
+        # every file already carrying the table's physical schema.
+        driver = (
+            min_file_bytes is not None
+            and small_bytes <= _STAGE_COMPACT_MAX_BYTES
+            and not prev.get("dv")
+            and not zorder_by
+            and not prev.get("partition_by")
+            and _plain_concat(table_dir, prev, to_merge)
+        )
         # the live read applies any deletion vector, so a full rewrite
         # PURGES merge-on-read deletes into clean files by construction
-        df = _live_rows(spark, table_dir, prev, to_merge)
+        df = None if driver else _live_rows(spark, table_dir, prev, to_merge)
         v = _claim_version(table_dir, versions(table_dir))
         _await_predecessors(table_dir, v)
         if main_versions(table_dir)[-1] != v_read:
@@ -3159,38 +3281,51 @@ def compact(
         rel_dir = os.path.join("data", f"v{v}")
         staging = os.path.join(table_dir, rel_dir)
         pspec = prev.get("partition_by")
-        if zorder_by:
-            # OPTIMIZE ZORDER BY: cluster the rewrite on the Morton
-            # curve of the given columns so footer min/max stats prune
-            # files for predicates on ANY of them (operators/zorder.py;
-            # the maintenance twin of Delta's ZORDER). Stats for the
-            # z-columns are recorded below so skipping works at once.
-            from binance_etl_spark.operators.zorder import write_zordered
+        if driver:
+            import uuid as _uuid
 
-            _cm = _mapping(prev)
-            write_zordered(
-                _to_physical(df, _cm),
-                staging,
-                [_cm.get(c, c) for c in zorder_by],
-                n_out,
-            )
-        elif pspec and set(pspec) <= set(df.columns):
-            # the table declares a partition spec: the rewrite must
-            # PRESERVE the hidden-partition clustering (Delta OPTIMIZE
-            # compacts within partitions the same way) — otherwise
-            # maintenance would quietly destroy the equality-pruning
-            # layout write_version built
-            nspec = df.select(*pspec).distinct().count()
-            _to_physical(
-                df.repartitionByRange(
-                    max(n_out, int(nspec), 1), *[F.col(c) for c in pspec]
+            os.makedirs(staging, exist_ok=True)
+            driver = _merge_parquet(
+                [os.path.join(table_dir, rel) for rel in to_merge],
+                os.path.join(
+                    staging, f"part-00000-{_uuid.uuid4().hex}-merged.parquet"
                 ),
-                _mapping(prev),
-            ).write.mode("overwrite").parquet(staging)
-        else:
-            _to_physical(df.repartition(n_out), _mapping(prev)).write.mode(
-                "overwrite"
-            ).parquet(staging)
+            )
+        if not driver:
+            if df is None:  # the driver merge did not verify
+                df = _live_rows(spark, table_dir, prev, to_merge)
+            if zorder_by:
+                # OPTIMIZE ZORDER BY: cluster the rewrite on the Morton
+                # curve of the given columns so footer min/max stats prune
+                # files for predicates on ANY of them (operators/zorder.py;
+                # the maintenance twin of Delta's ZORDER). Stats for the
+                # z-columns are recorded below so skipping works at once.
+                from binance_etl_spark.operators.zorder import write_zordered
+
+                _cm = _mapping(prev)
+                write_zordered(
+                    _to_physical(df, _cm),
+                    staging,
+                    [_cm.get(c, c) for c in zorder_by],
+                    n_out,
+                )
+            elif pspec and set(pspec) <= set(df.columns):
+                # the table declares a partition spec: the rewrite must
+                # PRESERVE the hidden-partition clustering (Delta OPTIMIZE
+                # compacts within partitions the same way) — otherwise
+                # maintenance would quietly destroy the equality-pruning
+                # layout write_version built
+                nspec = df.select(*pspec).distinct().count()
+                _to_physical(
+                    df.repartitionByRange(
+                        max(n_out, int(nspec), 1), *[F.col(c) for c in pspec]
+                    ),
+                    _mapping(prev),
+                ).write.mode("overwrite").parquet(staging)
+            else:
+                _to_physical(df.repartition(n_out), _mapping(prev)).write.mode(
+                    "overwrite"
+                ).parquet(staging)
         new_files, file_meta = _stage_files(
             table_dir, rel_dir, coalesce_small=False
         )
@@ -3278,11 +3413,22 @@ def select_files(
     return kept, skipped
 
 
+def _appends_since_compact(table_dir: str) -> int:
+    """Main-line versions committed since the newest compaction (all of
+    them when the table was never compacted) — one manifest parse per
+    version walked back."""
+    since = 0
+    for v in reversed(main_versions(table_dir)):
+        if _load_manifest(table_dir, v).get("mode") == "compact":
+            break
+        since += 1
+    return since
+
+
 def foreach_batch_snapshot(
     table_dir: str,
     stats_cols: list[str] | None = None,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """writeStream.foreachBatch body committing one snapshot VERSION
     per micro-batch — exactly-once via the batch-id token: a replayed
@@ -3292,18 +3438,27 @@ def foreach_batch_snapshot(
     replace), never a half-written micro-batch — the versioned-corpus
     ingestion front end for reproducible training snapshots.
 
-    ``compact_every=N`` runs auto-OPTIMIZE maintenance inline: once N
-    non-compact versions accumulate since the last compaction, the
-    sink bin-packs the snapshot into ``compact_target_files`` files
-    (see `compact`). A per-micro-batch append sink otherwise grows
-    one file set per batch forever, and at 100 TB the scan cost of a
-    snapshot is driven by its FILE COUNT as much as its bytes.
-    Compaction is row-preserving, so a crash-replay that re-triggers
-    it merely commits another identical-content version — idempotent
-    in value, not in version count."""
+    ``compact_every=N`` runs tail-merge maintenance inline: once N
+    appends accumulate since the last compaction, the sink merges its
+    small-file tail — every file under ``_STAGE_COMPACT_MAX_BYTES`` —
+    with `compact(min_file_bytes=...)`. A tail within that size merges
+    on the driver with no Spark job; files at or above it are carried
+    by name, so a maintenance trigger costs the tail, never the table.
+    A per-micro-batch append sink otherwise grows one file set per
+    batch forever, and at 100 TB the scan cost of a snapshot is driven
+    by its FILE COUNT as much as its bytes. The cadence is counted in
+    memory: the first batch seeds it with one walk back through the
+    log (so a restarted query resumes the count), later batches add
+    one per NEW version (a replayed batch returns an existing one and
+    counts nothing). Compaction is row-preserving, so a crash-replay
+    that re-triggers it merely commits another identical-content
+    version — idempotent in value, not in version count."""
+    since: int | None = None  # appends since the last compaction
+    last = 0  # newest version this sink committed or saw
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        write_version(
+        nonlocal since, last
+        v = write_version(
             batch_df,
             table_dir,
             mode="append",
@@ -3312,18 +3467,19 @@ def foreach_batch_snapshot(
         )
         if not compact_every:
             return
-        since = 0
-        for v in reversed(main_versions(table_dir)):
-            if _load_manifest(table_dir, v).get("mode") == "compact":
-                break
+        if since is None:
+            since = _appends_since_compact(table_dir)
+        elif v > last:
             since += 1
+        last = max(last, v)
         if since >= compact_every:
-            compact(
+            last = compact(
                 batch_df.sparkSession,
                 table_dir,
-                target_files=compact_target_files,
                 stats_cols=stats_cols,
+                min_file_bytes=_STAGE_COMPACT_MAX_BYTES,
             )
+            since = 0
 
     return apply
 

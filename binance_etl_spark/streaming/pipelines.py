@@ -97,7 +97,9 @@ def write_table_stream(
     provider the reference stubs, factory.py:40-42).
     ``fmt='snapshot'`` lands each micro-batch as a VERSION of a
     snapshot-log table (operators/snapshots.py): exactly-once via
-    batch-id replay tokens, auto-compaction every 8 versions, readers
+    batch-id replay tokens, a tail merge of the small files every 8
+    versions (on the driver, no Spark job, while the tail is small —
+    see `foreach_batch_snapshot`), readers
     get time travel / tags / CDC over the live ingestion table — the
     lakehouse storage provider.
 
@@ -113,9 +115,7 @@ def write_table_stream(
             df.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
             .foreachBatch(
-                foreach_batch_snapshot(
-                    out_dir, compact_every=8, compact_target_files=4
-                )
+                foreach_batch_snapshot(out_dir, compact_every=8)
             )
             .start()
         )

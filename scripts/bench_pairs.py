@@ -12,7 +12,10 @@ slows a run the same way slower code does. Each run is appended to
 per workload and end-to-end metric of ``BENCHMARK.json``, the median and
 quartiles of each side, the ratio of the medians, how many pairs the
 change won, whether the median gap exceeds the parent's IQR, and every
-run's exit code and failed/attempted counts. It only drives
+run's exit code and failed/attempted counts. The same summary follows,
+ungated, for the printed secondary lines ``latency_p90_ms``,
+``rss.python_mb`` and ``rss.jvm_mb`` (the tail and where the memory
+sits), parsed from each run's ``name value unit`` lines. It only drives
 ``perfbench/run.py``, at the run length of its own default, and never
 edits it.
 """
@@ -28,6 +31,9 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# printed by perfbench/run.py beside the gated metrics; all lower-is-better
+SECONDARY = ("latency_p90_ms", "rss.python_mb", "rss.jvm_mb")
+
 
 def _steal_ticks() -> tuple[int, int]:
     """(steal, total) jiffies of all CPUs since boot."""
@@ -54,10 +60,24 @@ def run_once(checkout: str, workload: str, seed: int) -> dict:
     except (IndexError, ValueError):
         result = {"correct": False, "attempted": 0, "failed": 0, "metrics": {}}
     return {
+        "printed": _printed(lines),
         "exit": out.returncode, "wall_s": round(wall, 2), "steal_ticks": s1 - s0,
         "steal_pct": round(100.0 * (s1 - s0) / max(t1 - t0, 1), 2),
         "stderr_tail": out.stderr[-2000:] if out.returncode else "", **result,
     }
+
+
+def _printed(lines: list[str]) -> dict[str, float]:
+    """The run's ``name value unit`` lines as {name: value}."""
+    out = {}
+    for line in lines:
+        parts = line.split()
+        if len(parts) == 3:
+            try:
+                out[parts[0]] = float(parts[1])
+            except ValueError:
+                pass
+    return out
 
 
 def _quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -68,8 +88,12 @@ def _quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def _value(run: dict, name: str) -> float:
-    m = run["metrics"].get(name, float("nan"))
+    m = run["metrics"].get(name, run.get("printed", {}).get(name, float("nan")))
     return m["value"] if isinstance(m, dict) else m
+
+
+def _has(run: dict, name: str) -> bool:
+    return name in run["metrics"] or name in run.get("printed", {})
 
 
 def summarize(runs: list[dict], declared: list[dict]) -> list[str]:
@@ -83,9 +107,12 @@ def summarize(runs: list[dict], declared: list[dict]) -> list[str]:
         out.append(f"## {wl}: {len(full)} pairs")
         out.append("| metric | parent median [Q1, Q3] | change median [Q1, Q3] | ratio | wins | gap > parent IQR |")
         out.append("|---|---|---|---|---|---|")
-        for m in declared:
+        secondary = [{"name": n, "better": "lower"} for n in SECONDARY]
+        for m in declared + secondary:
             name, lower = m["name"], m["better"] == "lower"
-            both = [p for p in full if all(name in p[s]["metrics"] for s in ("parent", "change"))]
+            if m is secondary[0]:
+                out.append("| *printed, not gated* | | | | | |")
+            both = [p for p in full if all(_has(p[s], name) for s in ("parent", "change"))]
             if not both:
                 continue
             a = [_value(p["parent"], name) for p in both]

@@ -547,9 +547,7 @@ def test_foreach_batch_auto_compaction(spark, tmp_path):
     from binance_etl_spark.operators import snapshots as SNAP
 
     table = str(tmp_path / "t")
-    apply = SNAP.foreach_batch_snapshot(
-        table, compact_every=2, compact_target_files=2
-    )
+    apply = SNAP.foreach_batch_snapshot(table, compact_every=2)
     for b in range(4):
         apply(spark.range(100 * b, 100 * b + 50).repartition(6), b)
 
